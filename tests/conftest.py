@@ -19,6 +19,29 @@ def sf_dir():
     return SF_SMOKE
 
 
+@pytest.fixture(scope="session")
+def studybench():
+    """The study-load benchmark's seeded study generator and warehouse
+    checks (``studybench/gen.py``, ``studybench/check.py``), imported
+    from their files: inputs and expected warehouse contents for
+    tests that need no reference fixtures."""
+    import importlib.util
+    import sys
+    from types import SimpleNamespace
+
+    root = os.path.join(os.path.dirname(os.path.dirname(__file__)), "studybench")
+    mods = {}
+    for name in ("gen", "check"):
+        spec = importlib.util.spec_from_file_location(
+            f"studybench_{name}", os.path.join(root, f"{name}.py")
+        )
+        mod = importlib.util.module_from_spec(spec)
+        sys.modules[spec.name] = mod  # dataclasses resolve their module
+        spec.loader.exec_module(mod)
+        mods[name] = mod
+    return SimpleNamespace(**mods)
+
+
 # ---- scratch PostgreSQL (shared by the COPY-sink and SQL-script-runner
 # tests): initdb + pg_ctl on a private unix socket, server demoted to
 # nobody when running as root (postgres refuses root), torn down and

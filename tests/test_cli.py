@@ -39,6 +39,31 @@ def test_cli_upload_move_delete(spark, tmp_path):
     assert spark.read.parquet(os.path.join(wh, "observation_fact.parquet")).count() == 0
 
 
+def test_cli_upload_generated_study_replaces_in_place(studybench, tmp_path):
+    """Upload a generated clinical + expression study, then upload it
+    again with new values: each time the warehouse holds exactly what
+    the generator wrote (no duplicate append, no stale rows), with one
+    patient_dimension row per subject — the sample mapping's subjects
+    already have their clinical row (I2B2_LOAD_SAMPLES.sql:211-260)."""
+    from dataclasses import asdict
+
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    gen, check = studybench.gen, studybench.check
+    spec = gen.StudySpec("CLI Study", "CLIGEN", subjects=8, numeric=2, probes=40, samples=8)
+    studies, wh = str(tmp_path / "studies"), str(tmp_path / "wh")
+    for seed in (1, 2):
+        exp = gen.generate(studies, [spec], seed)[spec.study_id]
+        rc = main([studies, "--warehouse", wh, "--parent-node", gen.PARENT_NODE,
+                   "--force-start"])
+        assert rc == 0
+        assert check.check_study(wh, asdict(exp)) == []
+        pd = ds.dataset(os.path.join(wh, "patient_dimension.parquet")).to_table()
+        mine = pc.starts_with(pd["sourcesystem_cd"], spec.study_id + ":")
+        assert pc.sum(mine).as_py() == exp.patients
+
+
 def test_cli_version(capsys):
     assert main(["-v"]) == 0
     assert "tm_etl" in capsys.readouterr().out

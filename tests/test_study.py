@@ -2,6 +2,8 @@ r"""Study-directory orchestration + audit + metadata e2e
 (DirectoryProcessor/StudyProcessor/AuditableJobRunner behavior,
 MetaDataProcessor on the fixture's MetaDataToUpload)."""
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -300,3 +302,23 @@ def test_directory_processor_marks_all_studies(spark, tmp_path):
         assert statuses and set(statuses.values()) == {"DONE"}
         # the _FAIL_-prefixed Clinical dir was skipped, not routed
         assert "Clinical" not in statuses
+
+
+def test_clinical_file_with_two_study_ids_fails(spark, studybench, tmp_path):
+    """A study directory without the ``_<STUDY_ID>`` suffix takes its
+    id from the clinical file, which must carry exactly one
+    (ClinicalDataProcessor.groovy:253-277): a second id in one row
+    fails the clinical load instead of loading under the first."""
+    gen = studybench.gen
+    spec = gen.StudySpec("Two Ids", "TWOID", subjects=6, numeric=1)
+    gen.generate(str(tmp_path), [spec], seed=1)
+    study = tmp_path / "TwoIds"
+    os.rename(tmp_path / spec.dir_name, study)
+    data = study / "ClinicalDataToUpload" / f"{spec.study_id}_clinical.txt"
+    lines = data.read_text().splitlines()
+    lines[-1] = lines[-1].replace(spec.study_id, "OTHERID", 1)
+    data.write_text("\n".join(lines) + "\n")
+
+    loaded = load_study(spark, str(study), gen.PARENT_NODE)
+    assert [(m[0], m[2]) for m in loaded.manifest] == [("Clinical", "FAIL")]
+    assert not loaded.succeeded and loaded.trials == []

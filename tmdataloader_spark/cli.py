@@ -19,7 +19,7 @@ import argparse
 import os
 import sys
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from tmdataloader_spark.operators.dedup import LoadValidationError
 from tmdataloader_spark.plans.operations import (
@@ -119,19 +119,6 @@ def write_warehouse(wh: StudyWarehouse, wh_dir: str) -> None:
         os.replace(tmp, final)
 
 
-def _drop_study(wh: StudyWarehouse, trial_id: str) -> StudyWarehouse:
-    """Best-effort delete before re-insert (the upload upsert); unlike
-    delete_all_data this must not raise when the study is absent.
-    Only the study-absent signal (LoadValidationError) is swallowed —
-    a genuine Spark failure must propagate into the job's failure
-    path, not silently turn the replace-upload into a duplicate
-    append."""
-    try:
-        return delete_all_data(wh, trial_id=trial_id)
-    except LoadValidationError:
-        return wh
-
-
 def _union(base: DataFrame | None, add: DataFrame | None) -> DataFrame | None:
     if add is None:
         return base
@@ -140,31 +127,9 @@ def _union(base: DataFrame | None, add: DataFrame | None) -> DataFrame | None:
     return base.unionByName(add, allowMissingColumns=True)
 
 
-def _study_trials(loaded) -> list[str]:
-    """Distinct trial ids a StudyLoadResult landed (first fact row's
-    sourcesystem_cd per data type, order-preserving)."""
-    seen: set[str] = set()
-    out: list[str] = []
-    for res in loaded.results.values():
-        if getattr(res, "observation_fact", None) is None:
-            continue
-        row = (
-            res.observation_fact.filter(F.col("sourcesystem_cd").isNotNull())
-            .select("sourcesystem_cd")
-            .first()
-        )
-        trial = row[0] if row else None
-        if trial and trial not in seen:
-            seen.add(trial)
-            out.append(trial)
-    return out
-
-
-def merge_study_into_warehouse(
-    wh: StudyWarehouse, loaded, spark: SparkSession
-) -> StudyWarehouse:
+def merge_study_into_warehouse(wh: StudyWarehouse, loaded) -> StudyWarehouse:
     """Fold one StudyLoadResult's frames into the warehouse."""
-    from tmdataloader_spark.plans.study import _HDD_ROUTE, _SERIAL_HDD_ROUTE
+    from tmdataloader_spark.plans.hdd import HDDLoadResult, upsert_sample_patients
 
     # Drop each trial at most once, BEFORE merging any data type: a
     # study usually ships several ptypes (Expression + Clinical is the
@@ -172,23 +137,18 @@ def merge_study_into_warehouse(
     # rows tagged with the trial — dropping inside the per-ptype loop
     # would wipe the frames the previous ptype just merged, leaving
     # only the last data type loaded.
-    for trial in _study_trials(loaded):
-        wh = _drop_study(wh, trial)
+    for trial in loaded.trials:
+        wh = delete_all_data(wh, trial_id=trial)
     for ptype, res in loaded.results.items():
-        for attr, target in [
-            ("observation_fact", "observation_fact"),
-            ("patient_dimension", "patient_dimension"),
-            ("i2b2", "i2b2"),
-            ("concept_dimension", "concept_dimension"),
-            ("concept_counts", "concept_counts"),
-        ]:
-            add = getattr(res, attr, None)
-            if add is not None:
-                setattr(wh, target, _union(getattr(wh, target), add))
-        if ptype in _HDD_ROUTE or ptype in _SERIAL_HDD_ROUTE:
-            omics = _HDD_ROUTE.get(ptype) or _SERIAL_HDD_ROUTE[ptype]
-            wh.deapp[f"de_subject_{omics}_data"] = _union(
-                wh.deapp.get(f"de_subject_{omics}_data"), res.data
+        hdd = isinstance(res, HDDLoadResult)
+        for name in CORE_SCHEMAS:
+            add = getattr(res, name, None)
+            # an HDD result's sample patients are upserted at the end
+            if add is not None and not (hdd and name == "patient_dimension"):
+                setattr(wh, name, _union(getattr(wh, name), add))
+        if hdd:
+            wh.deapp[f"de_subject_{res.omics}_data"] = _union(
+                wh.deapp.get(f"de_subject_{res.omics}_data"), res.data
             )
             wh.deapp["de_subject_sample_mapping"] = _union(
                 wh.deapp.get("de_subject_sample_mapping"), res.sample_mapping
@@ -223,6 +183,14 @@ def merge_study_into_warehouse(
                     )
                     add = kept.unionByName(add, allowMissingColumns=True)
                 wh.biomart[tbl] = add
+    # sample-only subjects join patient_dimension only when no row
+    # exists for them yet, so clinical demographics win
+    # (I2B2_LOAD_SAMPLES.sql:211-260)
+    for res in loaded.results.values():
+        if isinstance(res, HDDLoadResult):
+            wh.patient_dimension = upsert_sample_patients(
+                res.sample_mapping, wh.patient_dimension
+            )
     return wh
 
 
@@ -436,6 +404,11 @@ def main(argv: list[str] | None = None) -> int:
     def run_upload() -> int:
         import tempfile
 
+        # Loaders cache frames read from the study files, and Spark
+        # serves any later read of the same paths from a matching
+        # cache: drop what an earlier upload in this session cached, or
+        # a re-upload of rewritten files loads the old values.
+        spark.catalog.clearCache()
         wh = read_warehouse(spark, wh_dir)
         with tempfile.TemporaryDirectory() as zip_work:
             studies = discover_studies(args.data_dir, root="", work_dir=zip_work)
@@ -459,30 +432,27 @@ def main(argv: list[str] | None = None) -> int:
                 )
                 for ptype, d, status, err in loaded.manifest:
                     print(f"    {ptype:<14} {status}{': ' + err if err else ''}")
-                if not loaded.succeeded:
+                ok = loaded.succeeded
+                if ok:
+                    try:
+                        # pre-merge guards: path/id conflicts +
+                        # --replace-study removal
+                        # (AbstractDataProcessor.groovy:80-116)
+                        for trial in loaded.trials:
+                            wh = check_study_conflicts(
+                                wh, trial, loaded.node + "\\",
+                                replace_study=args.replace_study,
+                            )
+                    except LoadValidationError as e:
+                        print(f"    CONFLICT       FAIL: {e}", file=sys.stderr)
+                        ok = False
+                if not ok:
                     failed += 1
                     if args.stop_on_fail:
                         print(">>> STOP ON FAIL", file=sys.stderr)
                         return 1
                     continue
-                trials = _study_trials(loaded)
-                try:
-                    # pre-merge guards: path/id conflicts +
-                    # --replace-study removal
-                    # (AbstractDataProcessor.groovy:80-116)
-                    for trial in trials:
-                        wh = check_study_conflicts(
-                            wh, trial, loaded.node + "\\",
-                            replace_study=args.replace_study,
-                        )
-                except LoadValidationError as e:
-                    print(f"    CONFLICT       FAIL: {e}", file=sys.stderr)
-                    failed += 1
-                    if args.stop_on_fail:
-                        print(">>> STOP ON FAIL", file=sys.stderr)
-                        return 1
-                    continue
-                wh = merge_study_into_warehouse(wh, loaded, spark)
+                wh = merge_study_into_warehouse(wh, loaded)
                 # post-study security tail
                 # (i2b2_create_security_for_trial.sql:130-190 +
                 # PostStudyProcessor.groovy:30-42)
@@ -491,7 +461,7 @@ def main(argv: list[str] | None = None) -> int:
                     register_secure_study,
                 )
 
-                for trial in trials:
+                for trial in loaded.trials:
                     so, be, uid = register_secure_study(
                         wh.searchapp.get("search_secure_object"),
                         wh.biomart.get("bio_experiment"),

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from tmdataloader_spark.functions.paths import (
     get_last_path_component,
@@ -70,6 +70,12 @@ class ClinicalLoadResult:
     i2b2_secure: DataFrame = None
 
 
+def _strip_tags(col: Column) -> Column:
+    """Tag markers out of a category: ``$$1A{text}`` → ``text``, a bare
+    ``$$1A`` → nothing (I2B2_LOAD_CLINICAL_DATA.sql:373-375)."""
+    return F.regexp_replace(F.regexp_replace(col, TAG_BRACED, "$1"), TAG_BARE, "")
+
+
 def derive_work_columns(df: DataFrame, trial_id: str) -> DataFrame:
     r"""Stage 1 (:226-231): data_type placeholder 'T', category_path
     from category_cd (``_``→space, ``+``→``\``, tag markers stripped),
@@ -77,8 +83,7 @@ def derive_work_columns(df: DataFrame, trial_id: str) -> DataFrame:
     cat_path = F.regexp_replace(
         F.regexp_replace(F.col("category_cd"), "_", " "), r"\+", "\\\\"
     )
-    cat_path = F.regexp_replace(cat_path, TAG_BRACED, "$1")
-    cat_path = F.regexp_replace(cat_path, TAG_BARE, "")
+    cat_path = _strip_tags(cat_path)
     usub = F.concat_ws(
         ":",
         F.lit(trial_id),
@@ -113,10 +118,7 @@ def cleanse(df: DataFrame, always_set_visit_name: bool = False) -> DataFrame:
     ).withColumn("data_label", cleansing.label_pipe_to_comma(F.col("data_label")))
     if not always_set_visit_name:
         df = cleansing.suppress_single_visit(df)
-    # tag-marker strip on category_cd (:373-375)
-    cat = F.regexp_replace(F.col("category_cd"), TAG_BRACED, "$1")
-    cat = F.regexp_replace(cat, TAG_BARE, "")
-    df = df.withColumn("category_cd", cat)
+    df = df.withColumn("category_cd", _strip_tags(F.col("category_cd")))
     # F8: chop the doubled label off BOTH path and category_cd
     last_path = F.upper(F.element_at(F.split(F.col("category_path"), "\\\\"), -1))
     dup = (F.col("data_label").isNotNull()) & (last_path == F.upper(F.col("data_label")))
@@ -190,17 +192,23 @@ def inject_placeholders(df: DataFrame) -> DataFrame:
     return df.withColumn("category_path", final)
 
 
-def _substitute_placeholders():
-    """Literal placeholder substitution (labels/values may contain
-    regex-special chars, so `F.replace`, not `regexp_replace` — the
-    reference uses plain `replace`, :758-767)."""
+def _leaf_node(top_node: str) -> Column:
+    r"""A row's leaf path (:758-798): placeholders substituted under
+    ``top_node``, ``\``-runs collapsed.  build_trial_nodes and fact
+    assembly both build their leaves here — a fact whose leaf differs
+    from its node's falls out of the node join. Substitution is literal
+    (labels/values may contain regex-special chars, so `F.replace`, not
+    `regexp_replace` — the reference uses plain `replace`, :758-767)."""
     subst = F.col("category_path")
     subst = F.replace(subst, F.lit("DATALABEL"), F.coalesce(F.col("data_label"), F.lit("")))
     subst = F.replace(subst, F.lit("VISITNAME"), F.coalesce(F.col("visit_name"), F.lit("")))
-    return F.when(
+    subst = F.when(
         F.col("data_type") == "T",
         F.replace(subst, F.lit("DATAVALUE"), F.coalesce(F.col("data_value"), F.lit(""))),
     ).otherwise(subst)
+    return F.regexp_replace(
+        F.concat(F.lit(top_node), subst, F.lit("\\")), r"(\\){2,}", "\\\\"
+    )
 
 
 def _rename_timestamp_leaf(leaf_col):
@@ -224,11 +232,8 @@ def build_trial_nodes(df: DataFrame, top_node: str) -> DataFrame:
     r"""Stage 5b (:758-798): distinct leaf paths with placeholders
     substituted; numeric leaves omit DATAVALUE; ``\\``-runs collapse;
     Timestamp leaves renamed via timestamp_to_timepoint."""
-    subst = _substitute_placeholders()
-    leaf = F.concat(F.lit(top_node), subst, F.lit("\\"))
-    leaf = F.regexp_replace(leaf, r"(\\){2,}", "\\\\")
     nodes = df.select(
-        leaf.alias("leaf_node"),
+        _leaf_node(top_node).alias("leaf_node"),
         "category_cd",
         "visit_name",
         "data_label",
@@ -372,15 +377,12 @@ def load_clinical(
 
     # Stage 8: fact assembly (J1) — rebuild each fact's leaf path, then
     # join nodes (broadcast: node count ≪ fact count) and patients.
-    subst = _substitute_placeholders()
-    leaf = F.regexp_replace(F.concat(F.lit(top_node), subst, F.lit("\\")), r"(\\){2,}", "\\\\")
     # Timestamp leaves were renamed to timepoint labels in
     # build_trial_nodes — rename the fact's leaf IDENTICALLY or every
     # timestamp fact silently falls out of the inner node join
     # (ClinicalDataProcessorTest.groovy:860-954 counts patients at
     # '\Baseline\'/'\1 minute\' nodes)
-    leaf = _rename_timestamp_leaf(leaf)
-    facts_raw = work.withColumn("leaf_node", leaf)
+    facts_raw = work.withColumn("leaf_node", _rename_timestamp_leaf(_leaf_node(top_node)))
     node_keys = F.broadcast(
         trial_nodes.select("leaf_node").distinct().join(
             concept_dim.select(

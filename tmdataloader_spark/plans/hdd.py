@@ -31,7 +31,7 @@ import re
 from dataclasses import dataclass
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from tmdataloader_spark.functions.paths import get_last_path_component, path_hlevel
 from tmdataloader_spark.operators.dedup import LoadValidationError
@@ -56,6 +56,8 @@ class HDDLoadResult:
     i2b2: DataFrame  # ontology nodes incl. filled-in folders
     patient_dimension: DataFrame
     platform: GplPlatform
+    trial_id: str  # upper-cased study id every row is tagged with
+    omics: str  # OMICS_TYPES key: names the de_subject_<omics>_data table
     observation_fact: DataFrame | None = None  # per-sample facts
 
 
@@ -182,15 +184,35 @@ def read_subject_sample_mapping(
     return out
 
 
+def _sample_leaf(top_node: str, title_col: Column) -> Column:
+    r"""A sample's concept path (I2B2_LOAD_SAMPLES.sql:318-366):
+    category_cd with PLATFORM→``title_col`` and TISSUETYPE/ATTR1/ATTR2
+    substituted, ``+``→``\``, ``_``→space, under ``top_node`` with
+    backslash-runs collapsed. The ontology leaves and the sample
+    mapping's concept_path both come from here, so they always join."""
+    subst = F.col("category_cd")
+    subst = F.replace(subst, F.lit("PLATFORM"), title_col)
+    subst = F.replace(subst, F.lit("ATTR1"), F.coalesce(F.col("attribute_1"), F.lit("")))
+    subst = F.replace(subst, F.lit("ATTR2"), F.coalesce(F.col("attribute_2"), F.lit("")))
+    subst = F.replace(
+        subst, F.lit("TISSUETYPE"),
+        F.coalesce(F.col("tissue_type"), F.lit("Unspecified Tissue Type")),
+    )
+    subst = F.regexp_replace(subst, r"\+", "\\\\")
+    subst = F.regexp_replace(subst, "_", " ")
+    return F.regexp_replace(
+        F.concat(F.lit(top_node), subst, F.lit("\\")), r"(\\){2,}", "\\\\"
+    )
+
+
 def build_hdd_nodes(
     mapping: DataFrame,
     top_node: str,
     platform_title: str,
     gpl_info: DataFrame | None = None,
 ) -> DataFrame:
-    r"""Leaf-node templating (I2B2_LOAD_SAMPLES.sql:318-366):
-    PLATFORM→gpl title, TISSUETYPE/ATTR1/ATTR2 substituted, ``+``→``\``,
-    ``_``→space, backslash-runs collapsed; folders filled in.
+    """Ontology nodes of the sample leaves (:func:`_sample_leaf`),
+    folders filled in.
 
     With ``gpl_info`` (platform, title) the title is resolved PER ROW
     via a broadcast left join — the reference's shape (:334-336), which
@@ -205,20 +227,7 @@ def build_hdd_nodes(
         title_col = F.coalesce(F.col("title"), F.lit(""))
     else:
         title_col = F.lit(platform_title)
-    subst = F.col("category_cd")
-    subst = F.replace(subst, F.lit("PLATFORM"), title_col)
-    subst = F.replace(subst, F.lit("ATTR1"), F.coalesce(F.col("attribute_1"), F.lit("")))
-    subst = F.replace(subst, F.lit("ATTR2"), F.coalesce(F.col("attribute_2"), F.lit("")))
-    subst = F.replace(
-        subst, F.lit("TISSUETYPE"),
-        F.coalesce(F.col("tissue_type"), F.lit("Unspecified Tissue Type")),
-    )
-    subst = F.regexp_replace(subst, r"\+", "\\\\")
-    subst = F.regexp_replace(subst, "_", " ")
-    leaf = F.regexp_replace(
-        F.concat(F.lit(top_node), subst, F.lit("\\")), r"(\\){2,}", "\\\\"
-    )
-    leaves = mapping.select(leaf.alias("path")).distinct()
+    leaves = mapping.select(_sample_leaf(top_node, title_col).alias("path")).distinct()
     nodes = fill_in_tree(leaves)
     leaf_set = leaves.withColumn("is_leaf", F.lit(True))
     return (
@@ -247,19 +256,7 @@ def build_sample_mapping(
         ),
         "(::)+", ":",
     )
-    subst = F.col("category_cd")
-    subst = F.replace(subst, F.lit("PLATFORM"), F.lit(platform.title))
-    subst = F.replace(subst, F.lit("ATTR1"), F.coalesce(F.col("attribute_1"), F.lit("")))
-    subst = F.replace(subst, F.lit("ATTR2"), F.coalesce(F.col("attribute_2"), F.lit("")))
-    subst = F.replace(
-        subst, F.lit("TISSUETYPE"),
-        F.coalesce(F.col("tissue_type"), F.lit("Unspecified Tissue Type")),
-    )
-    subst = F.regexp_replace(subst, r"\+", "\\\\")
-    subst = F.regexp_replace(subst, "_", " ")
-    leaf = F.regexp_replace(
-        F.concat(F.lit(top_node), subst, F.lit("\\")), r"(\\){2,}", "\\\\"
-    )
+    leaf = _sample_leaf(top_node, F.lit(platform.title))
     return mapping.select(
         "trial_name",
         usub.alias("sourcesystem_cd"),
@@ -507,6 +504,7 @@ def load_hdd(
     mapping = read_subject_sample_mapping(spark, mapping_files[0], trial_id)
     if trial_id is None:  # the mapping file's own STUDY_ID governs
         trial_id = mapping.select("trial_name").first()[0]
+    trial_id = trial_id.upper()
 
     platforms = [r[0] for r in mapping.select("platform").distinct().collect()]
     platform_path = os.path.join(data_dir, f"{platforms[0]}.txt")
@@ -551,7 +549,7 @@ def load_hdd(
         if hdr[s_idx].strip().upper() != "SAMPID" and "ANALYTE" not in hdr[p_idx].upper():
             raise LoadValidationError(f"Incorrect {ot.name} data file")
         melted = wide.select(
-            F.lit(trial_id.upper()).alias("trial_name"),
+            F.lit(trial_id).alias("trial_name"),
             F.col(f"`{hdr[p_idx]}`").cast("string").alias("probeset_id"),
             F.col(f"`{hdr[s_idx]}`").cast("string").alias("expr_id"),
             F.col(f"`{hdr[v_idx]}`").cast("string").alias("intensity"),
@@ -569,7 +567,7 @@ def load_hdd(
             wide.columns[first_sample:] if first_sample is not None else None
         )
         melted = melt_expression_matrix(
-            wide, probe_col=id_col, trial=trial_id.upper(), sample_cols=sample_cols
+            wide, probe_col=id_col, trial=trial_id, sample_cols=sample_cols
         )
 
     validate_sample_mapping(mapping)
@@ -604,7 +602,7 @@ def load_hdd(
         log_round_types=ot.log_round_types,
     )
     data = scored.select(
-        F.lit(trial_id.upper()).alias("trial_name"),
+        F.lit(trial_id).alias("trial_name"),
         "probeset_id",
         "assay_id",
         F.col("raw_intensity"),
@@ -617,6 +615,8 @@ def load_hdd(
         i2b2=nodes,
         patient_dimension=patients,
         platform=platform,
+        trial_id=trial_id,
+        omics=omics,
         observation_fact=sample_facts(samples),
     )
 
@@ -675,8 +675,6 @@ def load_serial_hdd(
         spark, data_dir, trial_id, top_node, omics, log_base,
         use_first_gene_id=use_first_gene_id, use_t=use_t,
     )
-    if trial_id is None:
-        trial_id = result.sample_mapping.select("trial_name").first()[0]
     dim_files = [
         os.path.join(str(data_dir), f)
         for f in sorted(os.listdir(str(data_dir)))
@@ -686,7 +684,7 @@ def load_serial_hdd(
         raise LoadValidationError(
             f"File with sample dimensions mapping was not found in {data_dir}!"
         )
-    dims = read_sample_dimensions(spark, dim_files[0], trial_id)
+    dims = read_sample_dimensions(spark, dim_files[0], result.trial_id)
     i2b2 = result.i2b2.join(
         F.broadcast(dims.select(F.col("category_cd").alias("c_name"), "c_metadataxml")),
         on="c_name",

@@ -65,6 +65,9 @@ class StudyLoadResult:
     node: str
     manifest: list = field(default_factory=list)  # (type, dir, status, error)
     results: dict = field(default_factory=dict)  # type -> load result object
+    #: study ids the Clinical and HDD loads tagged their rows with, in
+    #: load order: the ids an upload replaces and secures
+    trials: list = field(default_factory=list)
     audit: AuditLog = field(default_factory=AuditLog)
 
     @property
@@ -169,6 +172,7 @@ def load_study(
     the flag additionally writes the offending key tuples as
     ``duplicates.csv`` next to the clinical data after the failed
     load (ClinicalDataProcessor.groovy:302-330)."""
+    from tmdataloader_spark.operators.dedup import assert_single_study_id
     from tmdataloader_spark.plans.acgh import load_acgh
     from tmdataloader_spark.plans.clinical import load_clinical
     from tmdataloader_spark.plans.hdd import load_hdd
@@ -192,6 +196,7 @@ def load_study(
             job = audit.start_job(f"load_{ptype.lower()}")
             audit.step(job, f"Processing {type_dir}")
             try:
+                trial = None
                 if ptype == "Clinical":
                     mappings = [
                         f
@@ -206,7 +211,7 @@ def load_study(
                         visit_name_first=visit_name_first,
                         allow_non_unique_columns=allow_non_unique_columns,
                     )
-                    trial = study_id or landing.select("study_id").first()[0]
+                    trial = study_id or assert_single_study_id(landing)
                     res = load_clinical(
                         spark, landing, trial, top_node,
                         always_set_visit_name=always_set_visit_name,
@@ -219,6 +224,7 @@ def load_study(
                         use_first_gene_id=use_first_gene_id,
                         use_t=use_t,
                     )
+                    trial = res.trial_id
                 elif ptype in _SERIAL_HDD_ROUTE:
                     from tmdataloader_spark.plans.hdd import load_serial_hdd
 
@@ -227,6 +233,7 @@ def load_study(
                         use_first_gene_id=use_first_gene_id,
                         use_t=use_t,
                     )
+                    trial = res.trial_id
                 elif ptype == "VCF":
                     res = load_vcf_study(spark, type_dir, top_node)
                 elif ptype == "SNP":
@@ -245,6 +252,8 @@ def load_study(
                     audit.step(job, f"{ptype} processor not implemented", 0, "Done")
                     audit.end_job(job, "SUCCESS")
                     continue
+                if trial is not None and trial not in result.trials:
+                    result.trials.append(trial)
                 result.results[ptype] = res
                 result.manifest.append((ptype, type_dir, "DONE", None))
                 audit.step(job, f"{ptype} load complete")

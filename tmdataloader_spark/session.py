@@ -14,6 +14,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, at most 16 GiB: a local-mode
+    driver holds every executor too, and a heap sized past the RAM the
+    host has lets the kernel's OOM killer take the JVM mid-job."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, ram_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "tmdataloader_spark",
     master: str | None = None,
@@ -51,16 +59,13 @@ def get_spark(
         # try_cast so it is correct under ANSI defaults too.
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Load driver testdata parquet tables as DataFrames (TESTDATA.md)."""
-    out = [spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names]
-    return out[0] if len(out) == 1 else out
